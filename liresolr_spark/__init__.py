@@ -35,10 +35,6 @@ INDEX_FORMAT_VERSION = 5
 BM25_K1 = 1.2
 BM25_B = 0.75
 
-# Candidate-pool default for two-phase retrieval
-# (ref: LireRequestHandler.java:59 candidateResultNumber = 20000).
-DEFAULT_CANDIDATES = 20000
-
 # Default page size (ref: LireRequestHandler.java:48-49 rows=60, start=0).
 DEFAULT_ROWS = 60
 

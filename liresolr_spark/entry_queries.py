@@ -2684,8 +2684,10 @@ DRIVER_WINDOW = [
 ]
 
 _missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-assert not _missing, f"DRIVER_WINDOW names unknown: {_missing}"
-assert len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)) == 50, len(DRIVER_WINDOW)
+if _missing:
+    raise RuntimeError(f"DRIVER_WINDOW names unknown: {_missing}")
+if not (len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)) == 50):
+    raise RuntimeError(len(DRIVER_WINDOW))
 _snap = dict(REGISTRY)
 REGISTRY.clear()
 REGISTRY.update({n: _snap[n] for n in DRIVER_WINDOW})

@@ -155,13 +155,13 @@ def expand_wildcard(
             f"{pattern!r} — give at least one literal prefix character")
     if lit == pattern:  # no metacharacters: a plain term query
         return [pattern]
-    if pattern == lit + "*" and "?" not in pattern and "*" not in lit:
+    if pattern == lit + "*":
         return expand_prefix(
             spark, index_dir, lit, field=field,
             max_expansions=max_expansions,
             dictionary_df=dictionary_df, dictionary_map=dictionary_map)
-    rx = re.compile(wildcard_regex(pattern) + r"\Z")
     if dictionary_map is not None:
+        rx = re.compile(wildcard_regex(pattern) + r"\Z")
         dmap = dictionary_map.get(field, {})
         matched = [(t, df) for t, df in dmap.items()
                    if t.startswith(lit) and rx.match(t)]

@@ -364,6 +364,49 @@ def _run_shard_kernel(spark, blocks, kernel, schema, num_shards,
     ).applyInPandas(lambda bl, mk: kernel(bl, mk), schema=schema)
 
 
+def _idf_by_qid(spark, index_dir, queries: dict, field: str,
+                dictionary_df, dictionary_map, meta) -> dict:
+    """{qid: {term: idf * qtf}} over the terms the dictionary knows; a qid
+    none of whose terms is indexed is left out. df comes from the
+    driver-pinned {field: {term: df}} snapshot when given (no Spark job),
+    else from one pruned dictionary aggregate summing df across dictionary
+    fragments (appended segments each add one — the Lucene multi-segment
+    term-dictionary merge)."""
+    from collections import Counter
+
+    if dictionary_map is not None:
+        dmap = dictionary_map.get(field, {})
+    else:
+        all_terms = sorted({t for ts in queries.values() for t in ts})
+        dictionary = (dictionary_df if dictionary_df is not None
+                      else spark.read.parquet(f"{index_dir}/dictionary"))
+        rows = (
+            dictionary.filter((F.col("field") == field)
+                              & F.col("term").isin(all_terms))
+            .groupBy("term").agg(F.sum("df").alias("df")).collect()
+        )
+        dmap = {r["term"]: int(r["df"]) for r in rows}
+    idfs = {}
+    for qid, terms in queries.items():
+        m = {t: idf_lucene(meta.n_docs, dmap[t]) * n
+             for t, n in Counter(terms).items() if t in dmap}
+        if m:
+            idfs[qid] = m
+    return idfs
+
+
+def _query_blocks(spark, index_dir, blocks_df, field: str,
+                  terms: list[str]) -> DataFrame:
+    """The query's posting blocks: partition pruning on shard dirs is
+    automatic, parquet row-group stats prune `term`."""
+    src = (blocks_df if blocks_df is not None
+           else spark.read.parquet(f"{index_dir}/blocks"))
+    return src.filter(
+        (F.col("field") == field) & F.col("term").isin(terms)
+    ).select("shard", "term", "block_seq", "docids", "tfs", "doclens",
+             "max_tf", "min_dl")
+
+
 def wand_topk_many(
     spark: SparkSession,
     index_dir: str,
@@ -385,38 +428,13 @@ def wand_topk_many(
     setup) is paid once for the whole batch instead of per query, and the
     kernel decodes each hot block once for every query that touches it.
     queries: {query_id: [terms...]}."""
-    from collections import Counter
-
     meta = meta or read_meta(index_dir)
-    if dictionary_map is not None:
-        dmap = dictionary_map.get(field, {})
-    else:
-        all_terms = sorted({t for ts in queries.values() for t in ts})
-        dictionary = (dictionary_df if dictionary_df is not None
-                      else spark.read.parquet(f"{index_dir}/dictionary"))
-        rows = (
-            dictionary.filter((F.col("field") == field)
-                              & F.col("term").isin(all_terms))
-            .groupBy("term").agg(F.sum("df").alias("df")).collect()
-        )
-        dmap = {r["term"]: int(r["df"]) for r in rows}
-    idfs = {}
-    for qid, terms in queries.items():
-        qtf = Counter(terms)
-        m = {t: idf_lucene(meta.n_docs, dmap[t]) * n
-             for t, n in qtf.items() if t in dmap}
-        if m:
-            idfs[qid] = m
+    idfs = _idf_by_qid(spark, index_dir, queries, field, dictionary_df,
+                       dictionary_map, meta)
     if not idfs:
         return spark.createDataFrame([], "qid string, docID long, score double")
     union_terms = sorted({t for m in idfs.values() for t in m})
-
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(union_terms)
-    ).select("shard", "term", "block_seq", "docids", "tfs", "doclens",
-             "max_tf", "min_dl")
+    blocks = _query_blocks(spark, index_dir, blocks_df, field, union_terms)
 
     kernel = _shard_kernel_many(idfs, k, meta.k1, meta.b, meta.avgdl,
                                 allow_mode=allow_docids is not None)
@@ -427,52 +445,17 @@ def wand_topk_many(
     return _merge_topk_per_qid(per_shard, k)
 
 
-def _merge_topk_per_qid(per_shard: DataFrame, k: int,
-                        strategy: str | None = None) -> DataFrame:
+def _merge_topk_per_qid(per_shard: DataFrame, k: int) -> DataFrame:
     """Global merge of the per-shard candidate rows (<= k per (qid, shard))
     into each qid's exact top-k under (score desc, docID asc) — the last
-    barrier of the batched serving path.
-
-    Strategies (all rank-identical; pytest-gated):
-      window — row_number over a per-qid window: shuffle by qid + SORT of
-               every candidate row, then a filter.
-      agg    — hash aggregate collecting each qid's candidates into one
-               array, sorted and sliced to k INSIDE the aggregate row
-               (sort_array on a (-score, docID) struct), then exploded.
-               Replaces the partition-wide sort with per-qid sorts of tiny
-               (<= shards*k) arrays and enables partial (map-side)
-               aggregation of the collect.
-      kernel — groupBy(qid).applyInPandas numpy lexsort top-k.
-
-    Measured (960-query batch, 20k-doc index, local[32], min-of-3 and a
-    5-rep re-run; BASELINE.md round-4 notes): 'agg' and 'window' are
-    WITHIN HOST NOISE of each other end-to-end (1.6-1.9s vs 1.9-2.0s,
-    then 1.83 vs 1.86 on the re-run); 'kernel' is ~1.4-1.5x slower (Arrow
-    per-group overhead for tiny groups). Default 'agg': at equal measured
-    cost it replaces the sort-based exchange + partition-wide sort with a
-    hash aggregate + per-qid sorts of bounded (<= shards*k) arrays, the
-    shape that degrades more gracefully when batch size x shard count
-    grows on a real cluster. The per-shard input is already k-truncated,
-    so shuffle volume is identical for both. Override via strategy /
-    LIRESOLR_MERGE_STRATEGY for re-measurement."""
-    import os
-
-    strategy = strategy or os.environ.get("LIRESOLR_MERGE_STRATEGY", "agg")
-    from pyspark.sql.window import Window
-
-    if strategy == "window":
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docID"))
-        return (per_shard.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k).drop("_rn"))
-    if strategy == "kernel":
-        def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            order = np.lexsort((pdf["docID"].values,
-                                -pdf["score"].values))[:k]
-            return pdf.iloc[order]
-
-        return per_shard.groupBy("qid").applyInPandas(
-            topk, schema="qid string, docID long, score double")
-    # 'agg': sort_array ascending on (-score, docID) == (score desc, docID asc)
+    barrier of the batched serving path: a hash aggregate collecting each
+    qid's candidates into one array, sorted and sliced to k INSIDE the
+    aggregate row (sort_array on a (-score, docID) struct), then exploded.
+    Per-qid sorts of tiny (<= shards*k) arrays instead of a partition-wide
+    sort, and the collect aggregates map-side; a row_number window
+    measured within noise of it and a per-qid applyInPandas merge ~1.4x
+    slower (BASELINE.md, round-4 notes)."""
+    # sort_array ascending on (-score, docID) == (score desc, docID asc)
     merged = per_shard.groupBy("qid").agg(
         F.slice(
             F.sort_array(F.collect_list(
@@ -508,41 +491,16 @@ def wand_topk(
     blocks_df / dictionary_df / meta: optional pre-loaded handles (a serving
     layer caches these once per index — repeated queries then skip file
     listing and footer reads). dictionary_map, if given, is a driver-side
-    {field: {term: df}} snapshot: idf is then computed WITHOUT any Spark job,
-    leaving exactly ONE job per query (the pruned block scan) — the hot
-    serving path. stats_out, if given, receives 'ranges_total' /
-    'ranges_visited' accumulators, valid AFTER the returned DataFrame is
-    acted on — the measured WAND pruning saving."""
-    from collections import Counter
-
+    {field: {term: df}} snapshot: idf is then computed WITHOUT any Spark
+    job. stats_out, if given, receives 'ranges_total' / 'ranges_visited'
+    accumulators, valid AFTER the returned DataFrame is acted on — the
+    measured WAND pruning saving."""
     meta = meta or read_meta(index_dir)
-    qtf = Counter(query_terms)
-    if dictionary_map is not None:
-        dmap = dictionary_map.get(field, {})
-        idf = {t: idf_lucene(meta.n_docs, dmap[t]) * n
-               for t, n in qtf.items() if t in dmap}
-    else:
-        # sum df across dictionary fragments: appended segments each add one
-        # (the Lucene multi-segment term-dictionary merge)
-        dictionary = (dictionary_df if dictionary_df is not None
-                      else spark.read.parquet(f"{index_dir}/dictionary"))
-        dstats = (
-            dictionary.filter((F.col("field") == field)
-                              & F.col("term").isin(list(qtf)))
-            .groupBy("term").agg(F.sum("df").alias("df")).collect()
-        )
-        idf = {r["term"]: idf_lucene(meta.n_docs, r["df"]) * qtf[r["term"]]
-               for r in dstats}
+    idf = _idf_by_qid(spark, index_dir, {0: query_terms}, field,
+                      dictionary_df, dictionary_map, meta).get(0)
     if not idf:
         return spark.createDataFrame([], "docID long, score double")
-
-    # partition pruning on shard dirs is automatic; row-group stats prune term
-    src = (blocks_df if blocks_df is not None
-           else spark.read.parquet(f"{index_dir}/blocks"))
-    blocks = src.filter(
-        (F.col("field") == field) & F.col("term").isin(list(idf))
-    ).select("shard", "term", "block_seq", "docids", "tfs", "doclens",
-             "max_tf", "min_dl")
+    blocks = _query_blocks(spark, index_dir, blocks_df, field, list(idf))
 
     acc_total = acc_visited = None
     if stats_out is not None:

@@ -169,6 +169,31 @@ def test_search_many_boolean_rank_identical(engine):
     assert any_rows  # the restriction must actually pass something
 
 
+def test_search_many_hash_field_boolean_rank_identical(engine):
+    """Batched serving on the hash field with a shared boolean restriction:
+    must/must_not strings hash like the query text, so per-qid results
+    equal the single-query hashes= path exactly."""
+    from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
+
+    queries = {"q_a": "readFile tokenBlock sortMerge",
+               "q_b": "import return def public"}
+    must, must_not = "return", "public"
+    batched = engine.search_many(queries, rows=10, field="ha", must=must,
+                                 must_not=must_not).collect()
+    by_qid: dict[str, list] = {}
+    for r in batched:
+        by_qid.setdefault(r["qid"], []).append(
+            (r["docID"], round(r["score"], 9)))
+    any_rows = False
+    for qid, text in queries.items():
+        hashes = [py_hash_token(t) for t in py_tokenize(text)]
+        want = [(r["docID"], round(r["score"], 9))
+                for r in engine.search(hashes=hashes, must=must,
+                                       must_not=must_not, rows=10).collect()]
+        assert by_qid.get(qid, []) == want, qid
+        any_rows = any_rows or bool(want)
+    assert any_rows  # the restriction must actually pass something
+
 def test_prefix_search_many_rank_identical(engine):
     """Batched prefix serving: per-qid results equal prefix_search; an
     unmatched prefix contributes no rows (and is counted in metrics)."""

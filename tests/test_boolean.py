@@ -130,3 +130,35 @@ def test_boolean_restriction_none_sides(spark, bidx):
     assert allow is None and deny is None
     allow, deny = boolean_restriction(spark, bidx[0], ["alpha"], None)
     assert allow is not None and deny is None
+
+
+def test_hash_field_boolean_clauses(spark, bidx):
+    """On the hash-token field 'ha' boolean clauses lower like the query:
+    must/must_not strings are tokenized then hashed, lists are taken as
+    hash tokens (the hashes= contract). Either form must equal the oracle
+    ranking restricted by hand to docs holding every MUST hash and no
+    MUST_NOT hash."""
+    from liresolr_spark.api import LireQueryEngine
+    from liresolr_spark.functions.tokenizer import py_hash_token, py_tokenize
+    from liresolr_spark.oracle import brute_force_topk
+
+    d, _ = bidx
+    eng = LireQueryEngine(spark, d)
+
+    def hashed(text):
+        return [py_hash_token(t) for t in py_tokenize(text)]
+
+    content = dict(_DOCS)
+    docs = [(r["docID"], content[r["path"]]) for r in spark.read.parquet(
+        f"{d}/docstats").select("docID", "path").collect()]
+    q, must, must_not = "read common", "alpha", "gamma"
+    toks = {i: set(hashed(c)) for i, c in docs}
+    want = [(i, round(s, 9)) for i, s in brute_force_topk(
+                docs, f"{q} {must}", k=len(docs), field="ha")
+            if set(hashed(must)) <= toks[i]
+            and not set(hashed(must_not)) & toks[i]][:10]
+    assert want  # the restriction must actually pass something
+    for m, m_not in ((must, must_not), (hashed(must), hashed(must_not))):
+        got = eng.search(hashes=hashed(q), must=m, must_not=m_not,
+                         rows=10).collect()
+        assert [(r["docID"], round(r["score"], 9)) for r in got] == want
